@@ -2,9 +2,9 @@
 
 Usage, from any directory:
 
-    python3 perfbench/run.py --workload er_bulk --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload er_bulk --seed 1 --seconds 1 --trace 0
 
-Workloads (see README.md beside this file): ``er_bulk``, ``er_hot``,
+Workloads (see README.md beside this file): ``er_bulk``,
 ``stream_ingest``, ``curate_corpus``. With ``--trace 0`` the result holds
 the end-to-end metrics of ``BENCHMARK.json``; with ``--trace 1`` the
 per-layer ones.
@@ -35,7 +35,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
 
-WORKLOADS = ("er_bulk", "er_hot", "stream_ingest", "curate_corpus")
+WORKLOADS = ("er_bulk", "stream_ingest", "curate_corpus")
 # the run as a whole must end within 180 s; leave room for the probes
 CHILD_TIMEOUT_S = 165.0
 MEM_SAMPLE_S = 0.25

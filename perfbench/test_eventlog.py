@@ -7,11 +7,16 @@ group ``jvm`` runs a JVM-only aggregation with a shuffle. The parser
 must put the Python-worker time under ``py`` in seconds (which pins the
 unit of Spark's ``time to run Python workers`` update to ms) and none
 under ``jvm``, and the shuffle under ``jvm``.
+
+The job runs in a child process with a Spark session of its own: the
+event-log settings become JVM system properties, and a session sharing
+this process's JVM would keep writing event logs after the test.
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 import pytest
@@ -26,20 +31,12 @@ SLEEP_S = 0.4
 PARTITIONS = 2
 
 
-@pytest.fixture()
-def tagged_log(tmp_path):
-    from pyspark import SparkContext
-
-    if SparkContext._active_spark_context is not None:
-        pytest.skip("needs a fresh SparkContext to enable the event log")
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        [ROOT, HERE, os.environ.get("PYTHONPATH", "")]
-    )
+def run_tagged_job(log_dir: str) -> None:
+    """The two-group job, with its event log written into ``log_dir``."""
     from pyspark.sql import functions as F
 
     from blink_spark.session import get_spark
 
-    log_dir = str(tmp_path / "events")
     spark = get_spark(
         "eventlog-test", cores=2, shuffle_partitions=2,
         extra_conf=event_log_conf(log_dir),
@@ -72,6 +69,18 @@ def tagged_log(tmp_path):
         assert n_py is None and n_jvm == 1000
     finally:
         spark.stop()
+
+
+@pytest.fixture()
+def tagged_log(tmp_path):
+    log_dir = str(tmp_path / "events")
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_GATEWAY_PORT"}
+    # the Python workers import blink_spark from this checkout
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, HERE, env.get("PYTHONPATH")) if p)
+    subprocess.run(
+        [sys.executable, os.path.abspath(__file__), log_dir],
+        cwd=str(tmp_path), env=env, check=True, timeout=300,
+    )
     return parse_event_log(find_event_log(log_dir))
 
 
@@ -88,3 +97,7 @@ def test_python_worker_time_is_attributed_per_tag_in_seconds(tagged_log):
     assert jvm.cpu_s > 0.0
     assert py.skew >= 1.0 and jvm.skew >= 1.0
     assert UNTAGGED not in tagged_log or tagged_log[UNTAGGED].python_s == 0.0
+
+
+if __name__ == "__main__":
+    run_tagged_job(sys.argv[1])

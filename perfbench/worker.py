@@ -31,8 +31,6 @@ CORES = 4
 # moved by 20% from run to run.
 DRIVER_HEAP = "2g"
 DRIVER_JAVA_OPTS = f"-Xms{DRIVER_HEAP} -Xmn512m"
-# repeats of input staging per run; setup_s takes their median
-STAGE_REPEATS = 2
 
 # per-tag Spark metrics reported in a traced run; a tag the workload does
 # not run reads 0
@@ -57,13 +55,11 @@ def make_workload(name: str, spark, seed: int, work: str):
     from workloads import CurateWorkload, ERWorkload, StreamWorkload
 
     if name == "er_bulk":
-        return ERWorkload(spark, seed, work, n_files=1200, hot_family=60, with_store=True)
-    if name == "er_hot":
-        return ERWorkload(spark, seed, work, n_files=500, hot_family=400, with_store=False)
+        return ERWorkload(spark, seed, work, n_files=600, hot_family=30)
     if name == "stream_ingest":
-        return StreamWorkload(spark, seed, work, n_files=300, backlog_files=4, files_per_trigger=2)
+        return StreamWorkload(spark, seed, work, n_files=160, files_per_trigger=1)
     if name == "curate_corpus":
-        return CurateWorkload(spark, seed, work, n_files=300, excerpt_every=40)
+        return CurateWorkload(spark, seed, work, n_files=150, excerpt_every=20)
     raise ValueError(f"unknown workload {name!r}")
 
 
@@ -162,11 +158,9 @@ def run(spark, args, session_s: float) -> dict:
     from tracing import job_group
 
     job_group(spark.sparkContext, "bench.setup")
-    stage_s = []
-    for _ in range(STAGE_REPEATS):
-        t0 = time.perf_counter()
-        wl.stage_inputs()
-        stage_s.append(time.perf_counter() - t0)
+    t0 = time.perf_counter()
+    wl.stage_inputs()
+    stage_s = time.perf_counter() - t0
     t0 = time.perf_counter()
     wl.load()
     load_s = time.perf_counter() - t0
@@ -244,7 +238,7 @@ def run(spark, args, session_s: float) -> dict:
 def end_to_end(timed, session_s, stage_s, load_s, warmup_s) -> dict:
     med = statistics.median
     return {
-        "setup_s": session_s + med(stage_s) + load_s + warmup_s,
+        "setup_s": session_s + stage_s + load_s + warmup_s,
         "wall_s": med(r.wall_s for r in timed),
         "files_per_s": med(r.items / r.busy_s for r in timed),
         "batch_latency_s": med(r.batch_latency_s for r in timed),

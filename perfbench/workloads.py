@@ -1,7 +1,8 @@
 """The benchmark's workloads, driven only through the engine's public API.
 
-Each workload stages its inputs from ``corpus.generate_files(seed=...)``
-into parquet, then runs passes over them:
+Each workload stages its inputs once per run from
+``corpus.generate_files(seed=...)``, collected in one Spark job and
+written as parquet, then runs passes over them:
 
 * ``run_pass``     the product path, timed from input to complete result;
 * ``traced_pass``  each layer's public function called on its own, with its
@@ -21,9 +22,13 @@ import json
 import os
 import statistics
 import time
+import zlib
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blink_spark import streaming as bs
@@ -51,6 +56,9 @@ STREAM_SCHEMA = (
     "content string, event_ts timestamp"
 )
 STREAM_TIMEOUT_S = 120.0
+# parquet files per staged input: one per core, as generate_files' own
+# partitioning would write it; also the stream's backlog files
+INPUT_PARTS = 4
 
 
 @dataclass
@@ -75,6 +83,22 @@ def cluster_checksum(clusters: DataFrame, id_col: str) -> str:
         F.sum(F.hash(id_col, "cluster_id").cast("long")).alias("h"),
     ).collect()[0]
     return f"{r['n']}:{r['c']}:{r['h']}"
+
+
+def write_parts(pdf: pd.DataFrame, path: str, part_of: pd.Series | None = None) -> list[str]:
+    """Write ``pdf`` as ``INPUT_PARTS`` parquet files, in contiguous row
+    ranges or by ``part_of`` (a part number per row); returns the paths."""
+    if part_of is None:
+        part_of = pd.Series(range(len(pdf)), index=pdf.index) * INPUT_PARTS // max(len(pdf), 1)
+    os.makedirs(path, exist_ok=True)
+    paths = []
+    for i in range(INPUT_PARTS):
+        p = os.path.join(path, f"part-{i:05d}.parquet")
+        table = pa.Table.from_pandas(pdf[part_of == i], preserve_index=False)
+        # Spark reads microsecond timestamps, not pandas' nanoseconds
+        pq.write_table(table, p, coerce_timestamps="us")
+        paths.append(p)
+    return paths
 
 
 def dir_mb(path: str) -> float:
@@ -102,26 +126,24 @@ class Workload:
         """Input-size parameters; part of the cross-run checksum key."""
         return {"n_files": self.n_files, "hot_family": self.hot_family}
 
-    def corpus(self) -> DataFrame:
-        """``generate_files(seed=...)`` cut to whole clone families in
+    def corpus(self) -> pd.DataFrame:
+        """``generate_files(seed=...)``, with each file's ``file_id``,
+        collected in one Spark job and cut to whole clone families in
         entity-id order, ``n_files`` - 11 to ``n_files`` files in all:
         family sizes are seeded Zipf draws (at most 12 files, the hot
         family aside), so a plain entity count would move the input size,
         and every per-file rate with it, from seed to seed."""
-        path = os.path.join(self.inputs, "generated")
         # families average about two files; generate ~40% more than needed
-        generate_files(
+        files = generate_files(
             self.spark, n_entities=int(self.n_files * 0.7) + 1, seed=self.seed,
             hot_family_size=self.hot_family,
-        ).write.mode("overwrite").parquet(path)
-        files = self.spark.read.parquet(path)
-        sizes = files.groupBy("entity_id").agg(F.count(F.lit(1)).alias("n")).withColumn(
-            "upto", F.sum("n").over(Window.orderBy("entity_id"))
-        )
-        keep = sizes.where(F.col("upto") <= self.n_files)
-        if (keep.agg(F.max("upto")).first()[0] or 0) < self.n_files - 11:
+        ).select(*FILE_COLS, "entity_id", stable_file_id("repo", "path", "commit").alias("file_id"))
+        pdf = files.toPandas().sort_values(["entity_id", "file_id"], ignore_index=True)
+        upto = pdf.groupby("entity_id").size().cumsum()
+        keep = upto[upto <= self.n_files]
+        if keep.empty or keep.iloc[-1] < self.n_files - 11:
             raise RuntimeError(f"seed {self.seed} generated too few files for {self.n_files}")
-        return files.join(keep.select("entity_id"), "entity_id")
+        return pdf[pdf["entity_id"].isin(keep.index)].reset_index(drop=True)
 
     def stage_inputs(self) -> None:
         """(Re)write the inputs from the seed; the same seed gives the same rows."""
@@ -153,18 +175,17 @@ class Workload:
 
 
 class ERWorkload(Workload):
-    """Clone-family corpus through ``ERPipeline``; ``with_store`` selects the
-    CLI's product path (every stage persisted to a fresh ``StageStore``)."""
+    """Clone-family corpus through ``ERPipeline`` on the CLI's product path:
+    every stage persisted to a fresh ``StageStore``."""
 
     gate_f1 = 0.99  # BASELINE.json pairwise-F1 gate
 
-    def __init__(self, spark, seed, work, n_files: int, hot_family: int, with_store: bool):
+    def __init__(self, spark, seed, work, n_files: int, hot_family: int):
         super().__init__(spark, seed, work, n_files, hot_family)
-        self.with_store = with_store
         self.pipe = ERPipeline(ERConfig())
 
     def stage_inputs(self) -> None:
-        self.corpus().write.mode("overwrite").parquet(os.path.join(self.inputs, "files"))
+        write_parts(self.corpus()[[*FILE_COLS, "entity_id"]], os.path.join(self.inputs, "files"))
 
     def load(self) -> None:
         raw = self.spark.read.parquet(os.path.join(self.inputs, "files"))
@@ -184,29 +205,24 @@ class ERWorkload(Workload):
 
     def run_pass(self, d: str) -> PassResult:
         t0 = time.perf_counter()
-        if self.with_store:
-            res = self.pipe.run(self.files, store=StageStore(self.spark, os.path.join(d, "store")))
-            clusters = res.tables["clusters"]  # read back from the store
-        else:
-            res = self.pipe.run(self.files, scratch_dir=os.path.join(d, "scratch"))
-            clusters = self._spill(res.tables["clusters"], d, "clusters")
+        res = self.pipe.run(self.files, store=StageStore(self.spark, os.path.join(d, "store")))
+        clusters = res.tables["clusters"]  # read back from the store
         return self._result(clusters, time.perf_counter() - t0)
 
     def traced_pass(self, tracer, d):
         pipe, files = self.pipe, self.files
-        store = StageStore(self.spark, os.path.join(d, "store")) if self.with_store else None
+        store = StageStore(self.spark, os.path.join(d, "store"))
         stats = CCStats()
         ckpt = make_parquet_checkpointer(os.path.join(d, "cc"))
 
         def stage(tag: str, build) -> DataFrame:
             with tracer.span(tag):
                 df = self._spill(build(), d, tag)
-            if store is not None:
-                # what ERPipeline.run does after each stage with a store
-                with tracer.span("store"):
-                    store.write(df, tag)
-                    lineage = store.write_lineage(store.read(tag), tag)
-                    store.write_metrics(tag, lineage)
+            # what ERPipeline.run does after each stage with a store
+            with tracer.span("store"):
+                store.write(df, tag)
+                lineage = store.write_lineage(store.read(tag), tag)
+                store.write_metrics(tag, lineage)
             return df
 
         t0 = time.perf_counter()
@@ -227,9 +243,8 @@ class ERWorkload(Workload):
                 "s2_edges.kept_ratio": edges.count() / max(candidates, 1),
                 "s3_clusters.iterations": stats.iterations,
                 "s3_clusters.clusters": clusters.select("cluster_id").distinct().count(),
+                "store.mb_written": dir_mb(os.path.join(d, "store")),
             }
-            if store is not None:
-                counts["store.mb_written"] = dir_mb(os.path.join(d, "store"))
             result = self._result(clusters, wall)
         return result, counts
 
@@ -240,36 +255,34 @@ class ERWorkload(Workload):
 class StreamWorkload(Workload):
     """Closed-loop drain of a staged parquet backlog through
     normalize_stream -> signature_stream -> incremental_assign_stream into
-    a parquet sink; the next micro-batch starts when the previous commits."""
+    a parquet sink; the next micro-batch starts when the previous commits.
+    Every pass checks a checksum of its sink; the sink is resolved into
+    clusters (``resolve_assignments_transitive``) once per run."""
 
-    def __init__(self, spark, seed, work, n_files: int, backlog_files: int, files_per_trigger: int):
+    def __init__(self, spark, seed, work, n_files: int, files_per_trigger: int):
         super().__init__(spark, seed, work, n_files)
-        self.backlog_files = backlog_files
         self.files_per_trigger = files_per_trigger
         self.backlog = os.path.join(self.inputs, "backlog")
+        self.resolved: tuple[str, float] | None = None  # cluster checksum, pairwise F1
 
     def params(self) -> dict:
         return {
             **super().params(),
-            "backlog_files": self.backlog_files, "files_per_trigger": self.files_per_trigger,
+            "backlog_files": INPUT_PARTS, "files_per_trigger": self.files_per_trigger,
         }
 
     def stage_inputs(self) -> None:
-        (
-            self.corpus().select(
-                *FILE_COLS, "entity_id",
-                F.lit("2026-01-01 00:00:00").cast("timestamp").alias("event_ts"),
-            )
-            .repartition(self.backlog_files, "commit")
-            .sortWithinPartitions("commit")
-            .write.mode("overwrite").parquet(self.backlog)
-        )
+        pdf = self.corpus()[[*FILE_COLS, "entity_id"]].sort_values("commit", ignore_index=True)
+        pdf["event_ts"] = pd.Timestamp("2026-01-01", tz="UTC")
+        # files arrive in commit-hash order, so a clone family's files
+        # spread over the micro-batches and meet in the state store
+        part_of = pdf["commit"].map(lambda c: zlib.crc32(c.encode()) % INPUT_PARTS)
+        parts = write_parts(pdf, self.backlog, part_of)
         # the file source takes files in modification-time order; pin it
         # to the part number so every run sees the same micro-batches
-        parts = sorted(p for p in os.listdir(self.backlog) if p.endswith(".parquet"))
         base = time.time() - len(parts) - 10
         for i, p in enumerate(parts):
-            os.utime(os.path.join(self.backlog, p), (base + i, base + i))
+            os.utime(p, (base + i, base + i))
 
     def load(self) -> None:
         raw = self.spark.read.parquet(self.backlog)
@@ -334,17 +347,25 @@ class StreamWorkload(Workload):
         ends = [_ts(p["timestamp"]) + p["durationMs"]["triggerExecution"] / 1e3 for p in data]
         trig = [p["durationMs"]["triggerExecution"] / 1e3 for p in data]
         rows = sum(p["numInputRows"] for p in data)
-        clusters = self._spill(
-            bs.resolve_assignments_transitive(self.spark.read.parquet(os.path.join(d, "sink"))),
-            d, "clusters",
-        )
+        sink = self.spark.read.parquet(os.path.join(d, "sink"))
+        if self.resolved is None:
+            # resolved once per run: every pass's sink must match this
+            # one's checksum, so it resolves to the same clusters
+            clusters = self._spill(bs.resolve_assignments_transitive(sink), d, "clusters")
+            self.resolved = (
+                cluster_checksum(clusters, "file_id"), pairwise_metrics(clusters, self.gold)["f1"]
+            )
+        resolved, f1 = self.resolved
+        h = sink.agg(
+            F.count(F.lit(1)).alias("n"), F.sum(F.hash(*sink.columns).cast("long")).alias("h")
+        ).collect()[0]
         return PassResult(
             wall_s=max(ends) - t0,
             items=rows,
             busy_s=sum(trig),
             batch_latency_s=statistics.median(trig),
-            checksum=cluster_checksum(clusters, "file_id"),
-            f1=pairwise_metrics(clusters, self.gold)["f1"],
+            checksum=f"sink {h['n']}:{h['h']} clusters {resolved}",
+            f1=f1,
             progress=data,
         )
 
@@ -423,18 +444,11 @@ class CurateWorkload(Workload):
         return {**super().params(), "excerpt_every": self.excerpt_every}
 
     def stage_inputs(self) -> None:
-        docs = self.corpus().select(
-            stable_file_id("repo", "path", "commit").alias("doc_id"),
-            F.col("content").alias("text"),
-            "lang",
-            "entity_id",
-        )
-        docs.write.mode("overwrite").parquet(os.path.join(self.inputs, "docs"))
-        docs = self.spark.read.parquet(os.path.join(self.inputs, "docs"))
-        pick = F.pmod(F.xxhash64("doc_id", F.lit(self.seed)), F.lit(self.excerpt_every)) == 0
-        docs.where(pick).select(
-            "doc_id", F.substring("text", 1, self.EXCERPT_CHARS).alias("text")
-        ).write.mode("overwrite").parquet(os.path.join(self.inputs, "benchmark"))
+        docs = self.corpus().rename(columns={"file_id": "doc_id", "content": "text"})
+        write_parts(docs[["doc_id", "text", "lang", "entity_id"]], os.path.join(self.inputs, "docs"))
+        pick = docs["doc_id"].map(lambda i: zlib.crc32(f"{i}:{self.seed}".encode()) % self.excerpt_every == 0)
+        bench = docs.loc[pick, ["doc_id", "text"]].assign(text=lambda b: b["text"].str[: self.EXCERPT_CHARS])
+        write_parts(bench, os.path.join(self.inputs, "benchmark"))
 
     def load(self) -> None:
         raw = self.spark.read.parquet(os.path.join(self.inputs, "docs"))
