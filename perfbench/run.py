@@ -2,10 +2,10 @@
 
 Usage, from any directory:
 
-    python3 perfbench/run.py --workload er_bulk --seed 1 --seconds 1 --trace 0
+    python3 perfbench/run.py --workload er_curate --seed 1 --seconds 1 --trace 0
 
-Workloads (see README.md beside this file): ``er_bulk``,
-``stream_ingest``, ``curate_corpus``. With ``--trace 0`` the result holds
+Workloads (see README.md beside this file): ``er_curate``,
+``stream_ingest``. With ``--trace 0`` the result holds
 the end-to-end metrics of ``BENCHMARK.json``; with ``--trace 1`` the
 per-layer ones.
 
@@ -27,6 +27,7 @@ import math
 import os
 import shutil
 import signal
+import statistics
 import subprocess
 import sys
 import time
@@ -35,7 +36,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
 
-WORKLOADS = ("er_bulk", "stream_ingest", "curate_corpus")
+WORKLOADS = ("er_curate", "stream_ingest")
 # the run as a whole must end within 180 s; leave room for the probes
 CHILD_TIMEOUT_S = 165.0
 MEM_SAMPLE_S = 0.25
@@ -89,6 +90,8 @@ def main() -> int:
         print(f"perfbench: no value for {missing}", file=sys.stderr)
         return 1
     res.update(calib_before_s=calib_before, calib_after_s=calib_after)
+    if args.trace:
+        res["plain_wall_s"] = plain_wall_s(res)
     save_result(res)
     print_table(res, wanted)
     print(json.dumps({
@@ -220,6 +223,20 @@ def stop_session(proc: subprocess.Popen, patience: float) -> None:
     proc.wait()
 
 
+def plain_wall_s(res: dict) -> float | None:
+    """Median wall of the plain runs of the same workload and input size
+    saved in this checkout, the base of the tracing overhead; None if
+    there are none yet."""
+    d = os.path.join(WORK_ROOT, "results")
+    walls = []
+    for name in os.listdir(d) if os.path.isdir(d) else ():
+        with open(os.path.join(d, name), encoding="utf-8") as fh:
+            r = json.load(fh)
+        if (r["workload"], r["trace"], r["params"]) == (res["workload"], 0, res["params"]):
+            walls.append(r["diagnostics"]["wall_s"])
+    return statistics.median(walls) if walls else None
+
+
 def save_result(res: dict) -> None:
     d = os.path.join(WORK_ROOT, "results")
     os.makedirs(d, exist_ok=True)
@@ -243,6 +260,8 @@ def print_table(res: dict, wanted: dict[str, str]) -> None:
     if not res["trace"]:
         for k, u in wanted.items():
             print(f"  {k:<16} {m[k]:>14.6g} {u}")
+        print("  wall clock and JIT (not scored): " + " ".join(
+            f"{k}={v:.4g}" for k, v in res["diagnostics"].items()))
         return
     from worker import LAYER_TAGS, TAG_FIELDS
 
@@ -254,9 +273,12 @@ def print_table(res: dict, wanted: dict[str, str]) -> None:
     for k, v in m.items():  # all counts, also those of workloads not in BENCHMARK.json
         if k not in tag_metrics and v:
             print(f"  {k:<34} {v:>14.6g} {wanted.get(k, '')}")
+    traced, plain = m["trace.traced_wall_s"], res["plain_wall_s"]
+    overhead = (f"{traced / plain - 1.0:+.4f} of the median plain pass of this checkout's "
+                f"trace-0 runs ({traced:.3f} s traced vs {plain:.3f} s plain)" if plain else
+                "unknown until this checkout holds a trace-0 run of the workload")
     print(f"  uncovered share of the traced pass: {m['trace.uncovered_share']:.4f}; "
-          f"tracing overhead: {m['trace.overhead_share']:+.4f} of the plain pass "
-          f"({m['trace.traced_wall_s']:.3f} s traced vs {m['trace.plain_wall_s']:.3f} s plain)")
+          f"tracing overhead: {overhead}")
 
 
 if __name__ == "__main__":

@@ -2,10 +2,11 @@
 
 Started by ``run.py``, which samples this process tree's memory from the
 outside and brackets it with the host calibration probe. This process
-starts the session, stages the workload's inputs, warms up, runs timed
-passes for ``--seconds``, and with ``--trace 1`` adds one traced pass whose
-per-layer metrics come from the spans and from Spark's event log. It
-writes everything to the ``--result`` JSON file.
+starts the session and stages the workload's inputs. With ``--trace 0``
+it runs timed passes for ``--seconds``, the first one in the fresh JVM;
+with ``--trace 1`` it runs one traced pass instead, whose per-layer
+metrics come from the spans and from Spark's event log. It writes
+everything to the ``--result`` JSON file.
 """
 
 from __future__ import annotations
@@ -30,7 +31,10 @@ CORES = 4
 # timing-dependent heuristics, and peak resident memory of one workload
 # moved by 20% from run to run.
 DRIVER_HEAP = "2g"
-DRIVER_JAVA_OPTS = f"-Xms{DRIVER_HEAP} -Xmn512m"
+# A fixed number of JIT compiler threads: with the default dynamic number,
+# one that exits takes its CPU time into the JVM's total, where it can no
+# longer be told apart from the program's (see workloads.session_cpu_s).
+DRIVER_JAVA_OPTS = f"-Xms{DRIVER_HEAP} -Xmn512m -XX:-UseDynamicNumberOfCompilerThreads"
 
 # per-tag Spark metrics reported in a traced run; a tag the workload does
 # not run reads 0
@@ -52,14 +56,12 @@ COUNTS = (
 
 
 def make_workload(name: str, spark, seed: int, work: str):
-    from workloads import CurateWorkload, ERWorkload, StreamWorkload
+    from workloads import BatchWorkload, StreamWorkload
 
-    if name == "er_bulk":
-        return ERWorkload(spark, seed, work, n_files=600, hot_family=30)
+    if name == "er_curate":
+        return BatchWorkload(spark, seed, work, n_files=200, hot_family=30, excerpt_every=20)
     if name == "stream_ingest":
         return StreamWorkload(spark, seed, work, n_files=160, files_per_trigger=1)
-    if name == "curate_corpus":
-        return CurateWorkload(spark, seed, work, n_files=150, excerpt_every=20)
     raise ValueError(f"unknown workload {name!r}")
 
 
@@ -126,7 +128,7 @@ def main() -> int:
 
 
 def run(spark, args, session_s: float) -> dict:
-    from workloads import PassResult
+    from workloads import PassResult, cpu_delta, session_cpu_s
 
     wl = make_workload(args.workload, spark, args.seed, args.work)
     passes_dir = os.path.join(args.work, "passes")
@@ -151,7 +153,8 @@ def run(spark, args, session_s: float) -> dict:
         errs = wl.check(r, expected)
         if expected is None and not errs:
             expected = r.checksum
-        entry.update(wall_s=r.wall_s, checksum=r.checksum, f1=r.f1, errors=errs)
+        entry.update(wall_s=r.wall_s, cpu_s=r.cpu_s, jit_s=r.jit_s, checksum=r.checksum, f1=r.f1,
+                     errors=errs)
         log.append(entry)
         return None if errs else r
 
@@ -164,29 +167,16 @@ def run(spark, args, session_s: float) -> dict:
     t0 = time.perf_counter()
     wl.load()
     load_s = time.perf_counter() - t0
-    job_group(spark.sparkContext, "bench.plain")
-    t0 = time.perf_counter()
-    attempt("warmup", wl.run_pass)
-    warmup_s = time.perf_counter() - t0
+    setup_cpu = cpu_delta((0.0, 0.0), session_cpu_s())
 
-    timed: list[PassResult] = []
-    t_start = time.perf_counter()
-    while not timed or time.perf_counter() - t_start < args.seconds:
-        r = attempt("timed", wl.run_pass)
-        if r is not None:
-            timed.append(r)
-        elif sum(1 for e in log if e["errors"]) >= 3:
-            break
-
-    if not timed:
-        raise RuntimeError(f"no timed pass succeeded: {log}")
     out: dict = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "params": wl.params(), "items": wl.n_items,
-        "setup": {"session_s": session_s, "stage_s": stage_s, "load_s": load_s,
-                  "warmup_s": warmup_s},
+        "setup": {"session_s": session_s, "stage_s": stage_s, "load_s": load_s},
         "passes": log,
     }
+    # A run's first pass is the first of its JVM, as in a CLI invocation,
+    # so the traced pass compares with the first plain pass of other runs.
     if args.trace:
         from tracing import Tracer
 
@@ -196,32 +186,41 @@ def run(spark, args, session_s: float) -> dict:
         def traced(d):
             r, c = wl.traced_pass(tracer, d)
             counts.update(c)
+            out["stream_run_id"] = getattr(wl, "last_run_id", None)
             return r
 
         job_group(spark.sparkContext, None)
         rt = attempt("traced", traced)
+        if rt is None:
+            raise RuntimeError(f"the traced pass failed: {log}")
         self_s = tracer.self_seconds()
         if "s2_pairs.candidates" in counts and self_s.get("s2_scores"):
             counts["s2_scores.pairs_per_s"] = counts["s2_pairs.candidates"] / self_s["s2_scores"]
-        if rt is not None and rt.progress:
+        if rt.progress:
             busy = sum(p["durationMs"]["triggerExecution"] for p in rt.progress) / 1e3
             # for a stream, the uncovered part is the time outside any
             # micro-batch
             self_s["pass"] = rt.wall_s - busy
-        plain = statistics.median(r.wall_s for r in timed)
-        traced_wall = rt.wall_s if rt is not None else float("nan")
         out["spans"] = tracer.to_json()
-        out["stream_run_id"] = getattr(wl, "last_run_id", None)
         out["_tracer_self_s"] = self_s
         out["metrics"] = {
             **{k: counts.get(k, 0.0) for k in COUNTS},
-            "trace.plain_wall_s": plain,
-            "trace.traced_wall_s": traced_wall,
-            "trace.overhead_share": traced_wall / plain - 1.0,
-            "trace.uncovered_share": self_s.get("pass", 0.0) / traced_wall,
+            "trace.traced_wall_s": rt.wall_s,
+            "trace.uncovered_share": self_s.get("pass", 0.0) / rt.wall_s,
         }
     else:
-        out["metrics"] = end_to_end(timed, session_s, stage_s, load_s, warmup_s)
+        job_group(spark.sparkContext, "bench.plain")
+        timed: list[PassResult] = []
+        t_start = time.perf_counter()
+        while not timed or time.perf_counter() - t_start < args.seconds:
+            r = attempt("timed", wl.run_pass)
+            if r is not None:
+                timed.append(r)
+            elif sum(1 for e in log if e["errors"]) >= 3:
+                break
+        if not timed:
+            raise RuntimeError(f"no timed pass succeeded: {log}")
+        out["metrics"], out["diagnostics"] = end_to_end(timed, setup_cpu, session_s + stage_s + load_s)
 
     failed = sum(1 for e in log if e["errors"])
     correct = failed == 0
@@ -235,15 +234,27 @@ def run(spark, args, session_s: float) -> dict:
     return out
 
 
-def end_to_end(timed, session_s, stage_s, load_s, warmup_s) -> dict:
+def end_to_end(timed, setup_cpu: tuple[float, float], setup_wall_s: float) -> tuple[dict, dict]:
+    """The end-to-end metrics, and the wall-clock figures printed beside
+    them. Times are CPU times of the process tree, JIT compiler threads
+    excluded: on a VM whose host steals a varying share of its CPUs, one
+    run's wall time moved by a factor of 2 from one run to the next, its
+    CPU time by a fifth."""
     med = statistics.median
-    return {
-        "setup_s": session_s + stage_s + load_s + warmup_s,
-        "wall_s": med(r.wall_s for r in timed),
-        "files_per_s": med(r.items / r.busy_s for r in timed),
-        "batch_latency_s": med(r.batch_latency_s for r in timed),
+    metrics = {
+        "setup_s": setup_cpu[0],
+        "cpu_s": med(r.cpu_s for r in timed),
         "pairwise_f1": med(r.f1 for r in timed),
     }
+    diagnostics = {
+        "setup_wall_s": setup_wall_s,
+        "setup_jit_s": setup_cpu[1],
+        "wall_s": med(r.wall_s for r in timed),
+        "jit_s": med(r.jit_s for r in timed),
+        "files_per_s": med(r.items / r.busy_s for r in timed),
+        "batch_latency_s": med(r.batch_latency_s for r in timed),
+    }
+    return metrics, diagnostics
 
 
 def layer_metrics(self_s: dict[str, float], work: str, out: dict) -> dict:

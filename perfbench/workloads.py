@@ -59,6 +59,10 @@ STREAM_TIMEOUT_S = 120.0
 # parquet files per staged input: one per core, as generate_files' own
 # partitioning would write it; also the stream's backlog files
 INPUT_PARTS = 4
+CLK_TCK = os.sysconf("SC_CLK_TCK")
+# HotSpot's compiler threads; worker.py keeps their number fixed, so none
+# exits and takes its CPU time into the JVM's total unseen
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
 
 
 @dataclass
@@ -69,6 +73,8 @@ class PassResult:
     batch_latency_s: float
     checksum: str
     f1: float
+    cpu_s: float = 0.0  # CPU time of the process tree over the pass, JIT excluded
+    jit_s: float = 0.0  # CPU time of the JVM's JIT compiler threads over the pass
     errors: list[str] = field(default_factory=list)
     # stream telemetry of data-carrying batches
     progress: list[dict] = field(default_factory=list)
@@ -83,6 +89,44 @@ def cluster_checksum(clusters: DataFrame, id_col: str) -> str:
         F.sum(F.hash(id_col, "cluster_id").cast("long")).alias("h"),
     ).collect()[0]
     return f"{r['n']}:{r['c']}:{r['h']}"
+
+
+def session_cpu_s() -> tuple[float, float]:
+    """CPU seconds (user + system) used so far by this process's session
+    (the driver, its JVM and the Python workers, running or reaped), and
+    the part of it the JVM's JIT compiler threads used. Unlike wall time,
+    neither is charged the time the host steals from a shared VM's CPUs."""
+    sid = os.getsid(0)
+    total = jit = 0
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat", encoding="ascii", errors="replace") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+            if int(fields[3]) != sid:  # fields[3] is the session id
+                continue
+            # fields[11:15] are utime, stime, cutime, cstime
+            total += sum(int(f) for f in fields[11:15])
+            tids = os.listdir(f"/proc/{entry}/task")
+        except OSError:
+            continue  # exited while listing
+        for tid in tids:
+            try:
+                with open(f"/proc/{entry}/task/{tid}/stat", encoding="ascii", errors="replace") as fh:
+                    raw = fh.read()
+            except OSError:
+                continue  # a thread that ended while listing
+            if raw[raw.index("(") + 1:].startswith(JIT_THREADS):
+                jit += sum(int(f) for f in raw.rsplit(")", 1)[1].split()[11:13])
+    return total / CLK_TCK, jit / CLK_TCK
+
+
+def cpu_delta(start: tuple[float, float], end: tuple[float, float]) -> tuple[float, float]:
+    """(CPU time without the JIT compiler threads, their CPU time) between
+    two :func:`session_cpu_s` readings."""
+    jit = end[1] - start[1]
+    return end[0] - start[0] - jit, jit
 
 
 def write_parts(pdf: pd.DataFrame, path: str, part_of: pd.Series | None = None) -> list[str]:
@@ -146,7 +190,8 @@ class Workload:
         return pdf[pdf["entity_id"].isin(keep.index)].reset_index(drop=True)
 
     def stage_inputs(self) -> None:
-        """(Re)write the inputs from the seed; the same seed gives the same rows."""
+        """Write the inputs from the seed (the same seed gives the same
+        rows) and set ``n_items``, the number of files written."""
         raise NotImplementedError
 
     def load(self) -> None:
@@ -171,49 +216,109 @@ class Workload:
         return spill(df, os.path.join(d, name))
 
 
-# --------------------------------------------------------------- ER batch
+# ------------------------------------------------------------------ batch
 
 
-class ERWorkload(Workload):
-    """Clone-family corpus through ``ERPipeline`` on the CLI's product path:
-    every stage persisted to a fresh ``StageStore``."""
+class BatchWorkload(Workload):
+    """The two batch product paths over one staged clone-family corpus:
+    ``ERPipeline.run`` on the CLI's path, every stage persisted to a fresh
+    ``StageStore``; then training-data curation of the same files as
+    (doc_id, text, lang): exact dedup, MinHash-LSH near-dup clusters, one
+    representative per cluster, quality and repetition signals, and
+    decontamination against a benchmark set of 300-char excerpts."""
 
-    gate_f1 = 0.99  # BASELINE.json pairwise-F1 gate
+    gate_f1 = 0.99  # BASELINE.json pairwise-F1 gate, on the ER clusters
+    EXCERPT_CHARS = 300
 
-    def __init__(self, spark, seed, work, n_files: int, hot_family: int):
+    def __init__(self, spark, seed, work, n_files: int, hot_family: int, excerpt_every: int):
         super().__init__(spark, seed, work, n_files, hot_family)
+        self.excerpt_every = excerpt_every
         self.pipe = ERPipeline(ERConfig())
 
+    def params(self) -> dict:
+        return {**super().params(), "excerpt_every": self.excerpt_every}
+
     def stage_inputs(self) -> None:
-        write_parts(self.corpus()[[*FILE_COLS, "entity_id"]], os.path.join(self.inputs, "files"))
+        files = self.corpus()
+        write_parts(files[[*FILE_COLS, "entity_id", "file_id"]], os.path.join(self.inputs, "files"))
+        pick = files["file_id"].map(
+            lambda i: zlib.crc32(f"{i}:{self.seed}".encode()) % self.excerpt_every == 0
+        )
+        bench = files.loc[pick, ["file_id", "content"]].rename(
+            columns={"file_id": "doc_id", "content": "text"}
+        ).assign(text=lambda b: b["text"].str[: self.EXCERPT_CHARS])
+        write_parts(bench, os.path.join(self.inputs, "benchmark"))
+        self.n_items = len(files)
 
     def load(self) -> None:
         raw = self.spark.read.parquet(os.path.join(self.inputs, "files"))
         self.files = raw.select(*FILE_COLS)
-        self.gold = raw.select(stable_file_id("repo", "path", "commit").alias("file_id"), "entity_id")
-        self.n_items = raw.count()
+        self.gold = raw.select("file_id", "entity_id")
+        self.docs = raw.select(F.col("file_id").alias("doc_id"), F.col("content").alias("text"), "lang")
+        self.bench = self.spark.read.parquet(os.path.join(self.inputs, "benchmark"))
 
-    def _result(self, clusters: DataFrame, wall: float) -> PassResult:
+    def _curate(self, step) -> DataFrame:
+        """The curation chain; ``step(tag, build, shared)`` runs one call,
+        ``shared`` marking tables more than one later call reads."""
+        docs = self.docs
+        survivors = step("dedup.exact", lambda: docs.join(
+            exact_dup_groups(docs).where(F.col("doc_id") == F.col("dup_group")).select("doc_id"),
+            "doc_id",
+        ), True)
+        pairs = step("dedup.lsh_pairs", lambda: minhash_lsh_dup_pairs(survivors), False)
+        clusters = step("dedup.clusters", lambda: dedup_clusters(pairs, survivors), True)
+        kept = step("dedup.clusters", lambda: survivors.join(
+            keep_representatives(clusters).select("doc_id"), "doc_id"
+        ), True)
+        quality = step("textstats.quality", lambda: kept.select(
+            "doc_id", quality_score("text").alias("quality")
+        ), False)
+        repetition = step("curation.repetition", lambda: repetition_stats(kept), False)
+        contamination = step("curation.decontaminate", lambda: decontaminate(kept, self.bench), False)
+        return quality.join(repetition, "doc_id").join(contamination, "doc_id")
+
+    def _result(
+        self, clusters: DataFrame, curated: DataFrame, wall: float, cpu: tuple[float, float] = (0.0, 0.0)
+    ) -> PassResult:
+        r = curated.agg(
+            F.count(F.lit(1)).alias("kept"),
+            F.sum(F.hash("doc_id").cast("long")).alias("h"),
+            F.sum(F.col("contaminated").cast("long")).alias("contaminated"),
+            F.sum("quality").alias("q"),
+        ).collect()[0]
         return PassResult(
             wall_s=wall,
+            cpu_s=cpu[0],
+            jit_s=cpu[1],
             items=self.n_items,
             busy_s=wall,
             batch_latency_s=wall,
-            checksum=cluster_checksum(clusters, "file_id"),
+            checksum=(f"clusters {cluster_checksum(clusters, 'file_id')} "
+                      f"curated {r['kept']}:{r['h']}:{r['contaminated']}:{r['q']:.6f}"),
             f1=pairwise_metrics(clusters, self.gold)["f1"],
         )
 
     def run_pass(self, d: str) -> PassResult:
-        t0 = time.perf_counter()
+        names = itertools.count()
+
+        def step(tag, build, shared):
+            df = build()
+            return self._spill(df, d, f"{next(names)}_{tag}") if shared else df
+
+        t0, c0 = time.perf_counter(), session_cpu_s()
         res = self.pipe.run(self.files, store=StageStore(self.spark, os.path.join(d, "store")))
         clusters = res.tables["clusters"]  # read back from the store
-        return self._result(clusters, time.perf_counter() - t0)
+        curated = self._spill(self._curate(step), d, "curated")
+        wall, c1 = time.perf_counter() - t0, session_cpu_s()
+        return self._result(clusters, curated, wall, cpu_delta(c0, c1))
 
     def traced_pass(self, tracer, d):
         pipe, files = self.pipe, self.files
         store = StageStore(self.spark, os.path.join(d, "store"))
         stats = CCStats()
         ckpt = make_parquet_checkpointer(os.path.join(d, "cc"))
+        names = itertools.count()
+        steps: dict[str, DataFrame] = {}
 
         def stage(tag: str, build) -> DataFrame:
             with tracer.span(tag):
@@ -225,6 +330,12 @@ class ERWorkload(Workload):
                 store.write_metrics(tag, lineage)
             return df
 
+        def step(tag, build, shared):
+            with tracer.span(tag):
+                df = self._spill(build(), d, f"{next(names)}_{tag}")
+            steps[tag] = df
+            return df
+
         t0 = time.perf_counter()
         with tracer.span("pass", tag=False):
             s0 = stage("s0_normalized", lambda: pipe.s0_normalize(files))
@@ -234,9 +345,13 @@ class ERWorkload(Workload):
             scores = stage("s2_scores", lambda: pipe.s2_scores(pairs, s1))
             edges = stage("s2_edges", lambda: pipe.s2_edges(scores))
             clusters = stage("s3_clusters", lambda: pipe.s3_clusters(edges, s0, stats, ckpt))
+            curated = self._spill(self._curate(step), d, "curated")
         wall = time.perf_counter() - t0
         with tracer.span("bench.counts"):
             candidates = pairs.count()
+            verified = steps["dedup.lsh_pairs"].count()
+            # threshold 0 keeps every LSH candidate pair: the verify denominator
+            lsh_candidates = minhash_lsh_dup_pairs(steps["dedup.exact"], jaccard_threshold=0.0).count()
             counts = {
                 "s1_blocks.band_keys": blocks.count(),
                 "s2_pairs.candidates": candidates,
@@ -244,8 +359,9 @@ class ERWorkload(Workload):
                 "s3_clusters.iterations": stats.iterations,
                 "s3_clusters.clusters": clusters.select("cluster_id").distinct().count(),
                 "store.mb_written": dir_mb(os.path.join(d, "store")),
+                "dedup.lsh_pairs.verified_ratio": verified / max(lsh_candidates, 1),
             }
-            result = self._result(clusters, wall)
+            result = self._result(clusters, curated, wall)
         return result, counts
 
 
@@ -272,7 +388,7 @@ class StreamWorkload(Workload):
         }
 
     def stage_inputs(self) -> None:
-        pdf = self.corpus()[[*FILE_COLS, "entity_id"]].sort_values("commit", ignore_index=True)
+        pdf = self.corpus()[[*FILE_COLS, "entity_id", "file_id"]].sort_values("commit", ignore_index=True)
         pdf["event_ts"] = pd.Timestamp("2026-01-01", tz="UTC")
         # files arrive in commit-hash order, so a clone family's files
         # spread over the micro-batches and meet in the state store
@@ -283,11 +399,10 @@ class StreamWorkload(Workload):
         base = time.time() - len(parts) - 10
         for i, p in enumerate(parts):
             os.utime(p, (base + i, base + i))
+        self.n_items = len(pdf)
 
     def load(self) -> None:
-        raw = self.spark.read.parquet(self.backlog)
-        self.gold = raw.select(stable_file_id("repo", "path", "commit").alias("file_id"), "entity_id")
-        self.n_items = raw.count()
+        self.gold = self.spark.read.parquet(self.backlog).select("file_id", "entity_id")
 
     def _drain(self, q) -> list[dict]:
         """Progress of every data-carrying batch, once all staged rows have
@@ -311,12 +426,12 @@ class StreamWorkload(Workload):
             time.sleep(0.05)
 
     def run_pass(self, d: str) -> PassResult:
-        data, t0 = self._run_query(d)
-        return self._result(d, data, t0)
+        return self._result(d, *self._run_query(d))
 
-    def _run_query(self, d: str) -> tuple[list[dict], float]:
+    def _run_query(self, d: str) -> tuple[list[dict], float, tuple[float, float]]:
         """Drain the backlog into ``d/sink``; returns the data batches'
-        progress and the wall-clock time the query was started."""
+        progress, the wall-clock time the query was started, and the CPU
+        time the process tree spent until the backlog was drained."""
         src = (
             self.spark.readStream.schema(STREAM_SCHEMA)
             .option("maxFilesPerTrigger", self.files_per_trigger)
@@ -324,7 +439,7 @@ class StreamWorkload(Workload):
         )
         sigs = bs.signature_stream(bs.normalize_stream(src, STREAM_CFG), STREAM_CFG)
         assigned = bs.incremental_assign_stream(sigs, jaccard_threshold=0.5)
-        t0 = time.time()
+        t0, c0 = time.time(), session_cpu_s()
         q = (
             assigned.writeStream.format("parquet")
             .option("path", os.path.join(d, "sink"))
@@ -335,12 +450,13 @@ class StreamWorkload(Workload):
         )
         try:
             self.last_run_id = str(q.runId)
-            return self._drain(q), t0
+            data = self._drain(q)
+            return data, t0, cpu_delta(c0, session_cpu_s())
         finally:
             q.stop()
             q.awaitTermination(60)
 
-    def _result(self, d: str, data: list[dict], t0: float) -> PassResult:
+    def _result(self, d: str, data: list[dict], t0: float, cpu: tuple[float, float]) -> PassResult:
         errors = _telemetry_errors(data, self.n_items)
         if errors:
             return PassResult(0.0, 0, 0.0, 0.0, "", 0.0, errors=errors)
@@ -361,6 +477,8 @@ class StreamWorkload(Workload):
         ).collect()[0]
         return PassResult(
             wall_s=max(ends) - t0,
+            cpu_s=cpu[0],
+            jit_s=cpu[1],
             items=rows,
             busy_s=sum(trig),
             batch_latency_s=statistics.median(trig),
@@ -374,9 +492,9 @@ class StreamWorkload(Workload):
         # Spark); the worker reports them under the tag "stream"
         with tracer.span("pass", tag=False):
             with tracer.span("stream", tag=False):
-                data, t0 = self._run_query(d)
+                run = self._run_query(d)
         with tracer.span("bench.counts"):
-            r = self._result(d, data, t0)
+            r = self._result(d, *run)
         return r, stream_layer_metrics(r.progress) if not r.errors else {}
 
 
@@ -423,106 +541,3 @@ def stream_layer_metrics(data: list[dict]) -> dict[str, float]:
         "stream.state_mb": state(last, "memoryUsedBytes") / 2**20,
         "stream.fixed_share": 1.0 - add / trig,
     }
-
-
-# ---------------------------------------------------------------- curation
-
-
-class CurateWorkload(Workload):
-    """Training-data curation of the corpus as (doc_id, text, lang): exact
-    dedup, MinHash-LSH near-dup clusters, one representative per cluster,
-    quality and repetition signals, and decontamination against a
-    benchmark set of 300-char excerpts."""
-
-    EXCERPT_CHARS = 300
-
-    def __init__(self, spark, seed, work, n_files: int, excerpt_every: int):
-        super().__init__(spark, seed, work, n_files)
-        self.excerpt_every = excerpt_every
-
-    def params(self) -> dict:
-        return {**super().params(), "excerpt_every": self.excerpt_every}
-
-    def stage_inputs(self) -> None:
-        docs = self.corpus().rename(columns={"file_id": "doc_id", "content": "text"})
-        write_parts(docs[["doc_id", "text", "lang", "entity_id"]], os.path.join(self.inputs, "docs"))
-        pick = docs["doc_id"].map(lambda i: zlib.crc32(f"{i}:{self.seed}".encode()) % self.excerpt_every == 0)
-        bench = docs.loc[pick, ["doc_id", "text"]].assign(text=lambda b: b["text"].str[: self.EXCERPT_CHARS])
-        write_parts(bench, os.path.join(self.inputs, "benchmark"))
-
-    def load(self) -> None:
-        raw = self.spark.read.parquet(os.path.join(self.inputs, "docs"))
-        self.docs = raw.select("doc_id", "text", "lang")
-        self.gold = raw.select("doc_id", "entity_id")
-        self.bench = self.spark.read.parquet(os.path.join(self.inputs, "benchmark"))
-        self.n_items = raw.count()
-
-    def _chain(self, step) -> tuple[DataFrame, DataFrame]:
-        """The curation chain; ``step(tag, build, shared)`` runs one call,
-        ``shared`` marking tables more than one later call reads."""
-        docs = self.docs
-        survivors = step("dedup.exact", lambda: docs.join(
-            exact_dup_groups(docs).where(F.col("doc_id") == F.col("dup_group")).select("doc_id"),
-            "doc_id",
-        ), True)
-        pairs = step("dedup.lsh_pairs", lambda: minhash_lsh_dup_pairs(survivors), False)
-        clusters = step("dedup.clusters", lambda: dedup_clusters(pairs, survivors), True)
-        kept = step("dedup.clusters", lambda: survivors.join(
-            keep_representatives(clusters).select("doc_id"), "doc_id"
-        ), True)
-        quality = step("textstats.quality", lambda: kept.select(
-            "doc_id", quality_score("text").alias("quality")
-        ), False)
-        repetition = step("curation.repetition", lambda: repetition_stats(kept), False)
-        contamination = step("curation.decontaminate", lambda: decontaminate(kept, self.bench), False)
-        return clusters, quality.join(repetition, "doc_id").join(contamination, "doc_id")
-
-    def _result(self, clusters: DataFrame, curated: DataFrame, wall: float) -> PassResult:
-        r = curated.agg(
-            F.count(F.lit(1)).alias("kept"),
-            F.sum(F.hash("doc_id").cast("long")).alias("h"),
-            F.sum(F.col("contaminated").cast("long")).alias("contaminated"),
-            F.sum("quality").alias("q"),
-        ).collect()[0]
-        return PassResult(
-            wall_s=wall,
-            items=self.n_items,
-            busy_s=wall,
-            batch_latency_s=wall,
-            checksum=f"{r['kept']}:{r['h']}:{r['contaminated']}:{r['q']:.6f}",
-            f1=pairwise_metrics(clusters, self.gold, id_col="doc_id")["f1"],
-        )
-
-    def run_pass(self, d: str) -> PassResult:
-        names = itertools.count()
-
-        def step(tag, build, shared):
-            df = build()
-            return self._spill(df, d, f"{next(names)}_{tag}") if shared else df
-
-        t0 = time.perf_counter()
-        clusters, curated = self._chain(step)
-        curated = self._spill(curated, d, "curated")
-        return self._result(clusters, curated, time.perf_counter() - t0)
-
-    def traced_pass(self, tracer, d):
-        names = itertools.count()
-        state = {}
-
-        def step(tag, build, shared):
-            with tracer.span(tag):
-                df = self._spill(build(), d, f"{next(names)}_{tag}")
-            state[tag] = df
-            return df
-
-        t0 = time.perf_counter()
-        with tracer.span("pass", tag=False):
-            clusters, curated = self._chain(step)
-            curated = self._spill(curated, d, "curated")
-        wall = time.perf_counter() - t0
-        with tracer.span("bench.counts"):
-            verified = state["dedup.lsh_pairs"].count()
-            # threshold 0 keeps every LSH candidate pair: the verify denominator
-            candidates = minhash_lsh_dup_pairs(state["dedup.exact"], jaccard_threshold=0.0).count()
-            result = self._result(clusters, curated, wall)
-        return result, {"dedup.lsh_pairs.verified_ratio": verified / max(candidates, 1)}
